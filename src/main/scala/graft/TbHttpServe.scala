@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import graft.ops.tb.TbPipeline
+import graft.ops.tb.{ReferenceSnapshot, TbPipeline}
 
 /** Live HTTP serving surface over the materialized endpoint payloads —
   * the reference's route table (`flask_api_server.py:710-783`) on the
@@ -89,10 +89,8 @@ object TbHttpServe {
   /** Usage: TbHttpServe <tbCsv> <popCsv> <port> — runs the pipeline,
     * materializes the payloads, serves until killed. */
   def main(args: Array[String]): Unit = {
-    val tbCsv = args.lift(0).getOrElse(
-      "/root/reference/data/raw/who_tb_data_20250923_041355.csv")
-    val popCsv = args.lift(1).getOrElse(
-      "/root/reference/data/raw/worldbank_population_20250923_041355.csv")
+    val tbCsv = args.lift(0).getOrElse(ReferenceSnapshot.TbCsv)
+    val popCsv = args.lift(1).getOrElse(ReferenceSnapshot.PopCsv)
     val port = args.lift(2).map(_.toInt).getOrElse(5000)
     val outDir = java.nio.file.Files
       .createTempDirectory("graft_http_serve").toString

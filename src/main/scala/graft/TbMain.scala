@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.tb.{TbCollect, TbPipeline, TbServing}
+import graft.ops.tb.{ReferenceSnapshot, TbCollect, TbPipeline, TbServing}
 import graft.sources.Fetch
 
 /** CLI orchestrator for the TB parity pipeline (SURVEY §7.1 cli/Main,
@@ -18,10 +18,8 @@ import graft.sources.Fetch
   */
 object TbMain {
   def main(args: Array[String]): Unit = {
-    val tbSrc = args.lift(0).getOrElse(
-      "/root/reference/data/raw/who_tb_data_20250923_041355.csv")
-    val popSrc = args.lift(1).getOrElse(
-      "/root/reference/data/raw/worldbank_population_20250923_041355.csv")
+    val tbSrc = args.lift(0).getOrElse(ReferenceSnapshot.TbCsv)
+    val popSrc = args.lift(1).getOrElse(ReferenceSnapshot.PopCsv)
     val outDir = args.lift(2).getOrElse("/tmp/tb_out")
     val format = args.lift(3).getOrElse("parquet")
 

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.tb.{TbPipeline, TbServing}
+import graft.ops.tb.{ReferenceSnapshot, TbPipeline, TbServing}
 
 /** Executable serving demo: materializes the reference API's endpoint
   * payloads (flask_api_server.py:539-783) as JSON files from the
@@ -101,10 +101,8 @@ object TbServe {
   }
 
   def main(args: Array[String]): Unit = {
-    val tbCsv = args.lift(0).getOrElse(
-      "/root/reference/data/raw/who_tb_data_20250923_041355.csv")
-    val popCsv = args.lift(1).getOrElse(
-      "/root/reference/data/raw/worldbank_population_20250923_041355.csv")
+    val tbCsv = args.lift(0).getOrElse(ReferenceSnapshot.TbCsv)
+    val popCsv = args.lift(1).getOrElse(ReferenceSnapshot.PopCsv)
     val outDir = args.lift(2).getOrElse("/tmp/tb_serve")
     val spark = GraftSession.create(appName = "graft-tb-serve",
       master = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")

@@ -567,12 +567,9 @@ object Dedup {
     * columns.
     *
     * Each stage is the scale-shaped variant: O(n) hash pass → bucketed
-    * LSH (never O(n²)) → iterative CC (swap in
-    * [[connectedComponentsStars]] via `starCC = true` for deep/
-    * adversarial duplicate graphs). */
+    * LSH (never O(n²)) → iterative min-label [[connectedComponents]]. */
   def dedupCorpus(docs: DataFrame, k: Int = 3, numHashes: Int = 16,
-                  bands: Option[Int] = None, threshold: Double = 0.6,
-                  starCC: Boolean = false): DataFrame = {
+                  bands: Option[Int] = None, threshold: Double = 0.6): DataFrame = {
     // exact pass: survivors = smallest doc_id per distinct text. The
     // semi-join recovers the survivor's full row — and the per-id
     // collapse closes the one hole in that recovery: with
@@ -593,8 +590,7 @@ object Dedup {
       .select(col("doc_id") +: others.map(c => col("_rep")(c).as(c)): _*)
     val pairs = minHashPairs(exactSurvivors, k, numHashes, bands, threshold)
       .select("d1", "d2")
-    val comp = if (starCC) connectedComponentsStars(pairs)
-               else connectedComponents(pairs)
+    val comp = connectedComponents(pairs)
     // unclustered docs survive; clustered ones only as the component min
     exactSurvivors.join(comp, Seq("doc_id"), "left")
       .filter(col("component_id").isNull || col("component_id") === col("doc_id"))

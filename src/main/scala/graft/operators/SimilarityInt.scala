@@ -4,23 +4,21 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 
-/** INTEGER-EXACT product quantization and IVF — the r19 VERDICT's
-  * remaining correctness tier: [[Similarity.pqTopK]]/[[Similarity
-  * .ivfPqTopK]] are float pipelines (decimal-deterministic WITHIN
-  * Spark, but k-means means and cosine reranks carry engine-specific
-  * float reductions no DuckDB oracle can replay), so their registered
-  * queries sat at rows-only checks with pinned recall companions.
-  * This family re-expresses the SAME index structures — PQ/ADC
+/** INTEGER-EXACT product quantization and IVF — the one vector-index
+  * family: the registered ANN queries and [[graft.streaming.VectorIngest]]
+  * build, append to and search the same index structures — PQ/ADC
   * (Jégou et al. TPAMI 2011 §IV), IVF-flat, and IVFADC (§V) — over
   * integer-quantized NORMALIZED vectors, where every training step,
   * every distance, and the final ranking are exact BIGINT arithmetic:
   * the full top-k output replays bit-for-bit in DuckDB (the q81
-  * `semanticDedup` recipe applied to the whole index family, r20).
+  * `semanticDedup` recipe applied to the whole index family). Float
+  * k-means means and cosine reranks would carry engine-specific float
+  * reductions no oracle can replay.
   *
   * The coding: z_i = round(Scale · x_i / ‖x‖₂) — int codes of the
   * L2-NORMALIZED vector, so ‖z‖ ≈ Scale for every vector and squared
-  * L2 over z ranks like cosine over x (the [[Similarity.l2Normalize]]
-  * identity, quantized); the exact-integer dot over z is the rerank
+  * L2 over z ranks like cosine over x (on unit vectors L2² = 2 − 2·cos,
+  * quantized); the exact-integer dot over z is the rerank
   * metric. The ONLY float work is the per-row coding chain (widen →
   * square → left-to-right sum → sqrt → divide → scale → round): every
   * op is a correctly-rounded IEEE-754 double op in a FIXED order, so
@@ -34,16 +32,13 @@ import org.apache.spark.sql.functions._
   * centroid updates are sign-split TRUNCATING integer means
   * ([[Spectral]]'s rescale spelling), argmins tie-break on centroid
   * id ascending, shortlists and ranks tie-break on neighbor id
-  * ascending. Quantization costs recall precision vs the float forms
-  * (~1e-4 relative on each coordinate — far below the codebooks' own
-  * quantization error); the float forms remain the API for callers
-  * who want them ([[Similarity]]), with their specs intact.
+  * ascending. Quantization costs ~1e-4 relative precision on each
+  * coordinate — far below the codebooks' own quantization error.
   *
-  * Scale shape is unchanged from the float family: codebooks and
-  * LUTs broadcast, the corpus side of every shuffle carries ids +
-  * small ints only, training runs on md5-bounded samples
-  * (corpus-size-free), and int64 codes are HALF the bytes of float64
-  * through every exchange.
+  * Scale shape: codebooks and LUTs broadcast, the corpus side of
+  * every shuffle carries ids + small ints only, training runs on
+  * md5-bounded samples (corpus-size-free), and int64 codes are HALF
+  * the bytes of float64 through every exchange.
   */
 object SimilarityInt {
 
@@ -58,7 +53,7 @@ object SimilarityInt {
     * accumulates strictly left-to-right from a 0.0 seed (bitwise
     * equal to DuckDB's seedless list_reduce on non-negative terms);
     * constant/zero vectors keep direction 0 via the 1e-30 guard
-    * (the [[Similarity.l2Normalize]] stance). */
+    * instead of dividing by zero. */
   def zCodes(df: DataFrame, idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame =
     df
@@ -93,9 +88,11 @@ object SimilarityInt {
     graft.functions.BoundedMinKPairs.register(df.sparkSession)
   }
 
-  /** Split a z vector into its m subvectors: (…, sub, sv) — the
-    * [[Similarity.subvectors]] split with the same loud in-plan
-    * divisibility guard. */
+  /** Split a z vector into its m subvectors: (…, sub, sv) with
+    * sv = dims [sub·d/m, (sub+1)·d/m). The dimension must divide
+    * evenly by m — ENFORCED in-plan with `raise_error` (a silent `div`
+    * would drop the trailing `size mod m` dimensions and rank on a
+    * prefix of every vector with no sign anything was lost). */
   private def subZ(df: DataFrame, m: Int): DataFrame =
     df
       .withColumn("_zck", when(expr(s"pmod(size(z), $m) != 0"),
@@ -161,15 +158,14 @@ object SimilarityInt {
           |        ELSE _s div size(svs) END)""".stripMargin).as("cvec"))
 
   /** Integer PQ codebooks: (sub, cid, cvec array<bigint>) — cid is
-    * the seed row's own vid (no global row_number; the
-    * [[Similarity.ivfBuildIndex]] id convention). */
+    * the seed row's own vid (no global row_number needed). */
   case class IntCodebook(centroids: DataFrame, m: Int, ksub: Int)
 
   /** Train integer PQ codebooks over a (vid, z) frame: md5-smallest
     * ksub seed rows, md5-bounded 256·ksub training sample (disjoint
     * seed stream), `iters` integer Lloyd steps. Memoized — the
-    * codebook feeds several broadcasts ([[Similarity.pqTrain]]'s
-    * reasoning). */
+    * codebook feeds several broadcasts, and an unpersisted plan would
+    * re-run the whole multi-stage Lloyd chain per consumer. */
   def pqTrainInt(z: DataFrame, m: Int, ksub: Int, iters: Int,
                  seed: Long, memoKey: String): IntCodebook = {
     require(m >= 1 && ksub >= 2 && iters >= 0,
@@ -237,10 +233,11 @@ object SimilarityInt {
         (col("_p") + 1L).cast("long").as("rank"))
   }
 
-  /** Integer ADC top-k ([[Similarity.pqTopK]]'s contract): one
+  /** Integer ADC top-k — (query_id, neighbor_id, rank), the
+    * [[Similarity.bruteForceTopK]] contract: one
     * m×ksub exact-integer distance table per query, adist = m BIGINT
-    * lookups summed (order-free — integer addition is associative,
-    * the reason the decimal crutch of the float form isn't needed),
+    * lookups summed (order-free — integer addition is associative, so
+    * no partitioning-dependent float accumulation),
     * shortlist of `rerank` by (adist, neighbor_id), exact z-dot
     * rerank. Every row of the output replays in DuckDB. */
   def pqTopKInt(codes: DataFrame, cb: IntCodebook, z: DataFrame,
@@ -273,19 +270,29 @@ object SimilarityInt {
 
   /** Integer IVF index: full-dim centroids (cid, cvec) + clustered
     * lists (vid, z, list_id). Routing is argmin exact d2 — on the
-    * fixed-norm z coding that IS the cosine routing of the float
-    * form, minus the last-ulp engine dependence. */
+    * fixed-norm z coding that IS cosine routing, minus the last-ulp
+    * engine dependence of a float argmax. */
   case class IntIvfIndex(centroids: DataFrame, lists: DataFrame)
 
-  /** Full-dim integer k-means + corpus clustering — the
-    * [[Similarity.ivfBuildIndex]] machinery on z codes. */
+  /** Full-dim integer k-means + corpus clustering: [[ivfTrainInt]]
+    * then [[ivfAssignInt]] over the same corpus. */
   def ivfBuildInt(z: DataFrame, nlist: Int, iters: Int, seed: Long,
                   memoKey: String): IntIvfIndex = {
+    val cents = ivfTrainInt(z, nlist, iters, seed, memoKey)
+    IntIvfIndex(cents, ivfAssignInt(cents, z))
+  }
+
+  /** Train the full-dim integer centroid table (cid, cvec) over a
+    * (vid, z) frame: md5-smallest nlist seed rows, md5-bounded
+    * 256·nlist training sample, `iters` integer Lloyd steps. Memoized
+    * under `memoKey`, which must encode every input that shapes it. */
+  def ivfTrainInt(z: DataFrame, nlist: Int, iters: Int, seed: Long,
+                  memoKey: String): DataFrame = {
     require(nlist >= 1 && iters >= 0, s"bad IVF-int dials: $nlist/$iters")
     registerKernels(z)
     // r22: training constructed inside the memo thunk (the pqTrainInt
     // rationale — the eager sample checkpoint must not run on a hit)
-    val done = graft.ops.Memo.of(z.sparkSession, memoKey) {
+    graft.ops.Memo.of(z.sparkSession, memoKey) {
       // full-dim k-means = the m=1 subspace problem; reuse the sub
       // machinery with one subvector covering the whole vector
       val seeds = z.withColumn("h", mdKey(col("vid"), seed))
@@ -301,17 +308,23 @@ object SimilarityInt {
       for (_ <- 1 to iters) cents = lloydStep(train, cents)
       cents.select(col("cid"), col("cvec"))
     }
-    val lists = z.select(lit(0).as("sub"), col("vid"), col("z").as("sv"))
+  }
+
+  /** Cluster a (vid, z) frame into posting-list rows (vid, z, list_id)
+    * against frozen centroids — the corpus leg of [[ivfBuildInt]] and
+    * the per-batch append of a vector ingest. One broadcast pass. */
+  def ivfAssignInt(centroids: DataFrame, z: DataFrame): DataFrame = {
+    registerKernels(z)
+    z.select(lit(0).as("sub"), col("vid"), col("z").as("sv"))
       .transform(sv => assignSub(sv,
-        done.select(lit(0).as("sub"), col("cid"), col("cvec"))))
+        centroids.select(lit(0).as("sub"), col("cid"), col("cvec"))))
       .select(col("vid"), col("sv").as("z"), col("cid").as("list_id"))
-    IntIvfIndex(done, lists)
   }
 
   /** Integer IVF-flat top-k: probe the `nprobe` d2-nearest lists per
     * query, exact z-dot their members, per-query top-k. Fully
     * replayable — candidate volume is nprobe/nlist of the corpus by
-    * construction (the [[Similarity.ivfTopK]] scale argument). */
+    * construction, a directly tunable recall/cost dial. */
   def ivfTopKInt(index: IntIvfIndex, queriesZ: DataFrame, z: DataFrame,
                  k: Int, nprobe: Int): DataFrame = {
     registerKernels(z)
@@ -340,8 +353,7 @@ object SimilarityInt {
   }
 
   /** Integer IVFADC index: coarse centroids route, residual PQ codes
-    * store — (vid, list_id, sub, code), m+1 small ints per vector
-    * (the [[Similarity.IvfPqIndex]] layout, integer-exact). */
+    * store — (vid, list_id, sub, code), m+1 small ints per vector. */
   case class IntIvfPqIndex(centroids: DataFrame, codebook: IntCodebook,
                            codes: DataFrame)
 
@@ -359,24 +371,36 @@ object SimilarityInt {
     // residuals derive from. One row per vector (m+1 small ints after
     // encode; d ints here), corpus-sized but narrow — the same
     // build-artifact stance as the memoized centroids.
-    val resid = ivf.lists
-      .join(broadcast(ivf.centroids), col("list_id") === col("cid"))
-      .select(col("vid"), col("list_id"),
-        expr("zip_with(z, cvec, (a, b) -> a - b)").as("z"))
-      .localCheckpoint(true)
+    val resid = residuals(ivf.lists, ivf.centroids).localCheckpoint(true)
     val cb = pqTrainInt(resid.select("vid", "z"), m, ksub, iters,
       seed + 2, memoKey + ":pq")
-    // r22: the encode pass is assignSub's in-row argmin — list_id
-    // rides through the row, so the old per-encode groupBy exchange
-    // (and its ksub-way join explosion) is gone
-    val codes = assignSub(subZ(resid, m), cb.centroids)
-      .select(col("vid"), col("list_id"), col("sub"), col("cid").as("code"))
-    IntIvfPqIndex(ivf.centroids, cb, codes)
+    IntIvfPqIndex(ivf.centroids, cb, encodeResiduals(resid, cb))
   }
 
-  /** Integer IVFADC search ([[Similarity.ivfPqTopK]]'s contract):
-    * nprobe d2-nearest lists, one m×ksub RESIDUAL distance table per
-    * (query, probed list), adist over probed code rows, shortlist,
+  /** Cluster + residual-encode a (vid, z) frame against a FROZEN
+    * IVF-PQ index's coarse centroids and codebook: (vid, list_id, sub,
+    * code) rows — the per-batch append of a vector ingest, the same
+    * assignment and encode steps [[ivfPqBuildInt]] runs. */
+  def ivfPqAssignInt(centroids: DataFrame, cb: IntCodebook,
+                     z: DataFrame): DataFrame =
+    encodeResiduals(residuals(ivfAssignInt(centroids, z), centroids), cb)
+
+  /** Integer residuals of posting-list rows: (vid, list_id, z − cvec). */
+  private def residuals(lists: DataFrame, centroids: DataFrame): DataFrame =
+    lists
+      .join(broadcast(centroids), col("list_id") === col("cid"))
+      .select(col("vid"), col("list_id"),
+        expr("zip_with(z, cvec, (a, b) -> a - b)").as("z"))
+
+  /** Residual encode: assignSub's in-row argmin with list_id riding
+    * through the row — (vid, list_id, sub, code), no groupBy exchange. */
+  private def encodeResiduals(resid: DataFrame, cb: IntCodebook): DataFrame =
+    assignSub(subZ(resid, cb.m), cb.centroids)
+      .select(col("vid"), col("list_id"), col("sub"), col("cid").as("code"))
+
+  /** Integer IVFADC search — the [[Similarity.bruteForceTopK]]
+    * output contract: nprobe d2-nearest lists, one m×ksub RESIDUAL
+    * distance table per (query, probed list), adist over probed code rows, shortlist,
     * exact z-dot rerank. Bit-replayable end to end. */
   def ivfPqTopKInt(index: IntIvfPqIndex, queriesZ: DataFrame,
                    z: DataFrame, k: Int, nprobe: Int,

@@ -80,8 +80,11 @@ object TbPipeline {
       base.select(col("country"), col("iso3"), col("g_whoregion"),
         col("indicator").as("year"), col("year").as("indicator"), col("value"))
     else base
+    // try_cast: rows the whole-file repair leaves with a non-numeric
+    // year (a partly transposed file) drop as null years, as under the
+    // reference's non-ANSI cast, instead of aborting the job
     repaired
-      .withColumn("year", col("year").cast(IntegerType))
+      .withColumn("year", col("year").try_cast(IntegerType))
       .filter(col("year").isNotNull && col("year") >= 2000 && col("year") <= 2030)
       .filter(col("indicator").isin(validIndicators: _*))
   }

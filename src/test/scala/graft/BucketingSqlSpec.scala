@@ -34,9 +34,7 @@ class BucketingSqlSpec extends AnyFunSuite {
   test("the reference's SQL views run verbatim-shaped through spark.sql") {
     // latest_country_stats (init_db.sql:96-106): rank by cases and by
     // per-100k over the latest year, via the SQL API on registered views
-    val p = TbPipeline.run(spark,
-      "/root/reference/data/raw/who_tb_data_20250923_041355.csv",
-      "/root/reference/data/raw/worldbank_population_20250923_041355.csv")
+    val p = TbPipeline.run(spark, ReferenceFiles.tbCsv, ReferenceFiles.popCsv)
     p.countrySummary.createOrReplaceTempView("country_summary")
     p.countryTrends.createOrReplaceTempView("country_trends")
 

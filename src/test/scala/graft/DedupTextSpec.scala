@@ -335,10 +335,6 @@ class DedupTextSpec extends AnyFunSuite {
     val expected = withDupes.count() - 1 /* exact dup */ -
       comp.filter($"doc_id" =!= $"component_id").count()
     assert(out.count() == expected)
-    // star-contraction path gives the identical corpus
-    val outStars = Dedup.dedupCorpus(withDupes, starCC = true)
-    assert(outStars.select("doc_id").collect().map(_.getLong(0)).toSet ==
-      out.select("doc_id").collect().map(_.getLong(0)).toSet)
     out.unpersist()
   }
 

@@ -18,9 +18,8 @@ import graft.sources.{Fetch, Sources}
 class FetchServeSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
-  private val refRaw = "/root/reference/data/raw"
-  private val tbCsv = s"$refRaw/who_tb_data_20250923_041355.csv"
-  private val popCsv = s"$refRaw/worldbank_population_20250923_041355.csv"
+  private def tbCsv = ReferenceFiles.tbCsv
+  private def popCsv = ReferenceFiles.popCsv
 
   test("fetchToFile lands a local snapshot (plain path and file:// URI)") {
     val dir = Files.createTempDirectory("graft_fetch")
@@ -63,7 +62,7 @@ class FetchServeSpec extends AnyFunSuite {
     // the golden country_summary.csv is the reference's materialized
     // serving table; its shape determines the stats endpoint numbers
     val golden = scala.io.Source.fromFile(
-      "/root/reference/data/processed/country_summary.csv").getLines().toSeq
+      ReferenceFiles.processed("country_summary.csv")).getLines().toSeq
     val header = golden.head.split(",", -1).toSeq
     val rows = golden.tail.filter(_.nonEmpty)
     val yearIdx = header.indexOf("year")
@@ -91,7 +90,7 @@ class FetchServeSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft_serve2").toString
     TbServe.writePayloads(spark, TbPipeline.run(spark, tbCsv, popCsv), out)
     val golden = scala.io.Source.fromFile(
-      "/root/reference/data/processed/country_trends.csv").getLines().toSeq
+      ReferenceFiles.processed("country_trends.csv")).getLines().toSeq
     val header = golden.head.split(",", -1).toSeq
     val iso = header.indexOf("iso3")
     val yr = header.indexOf("year")

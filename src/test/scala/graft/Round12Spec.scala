@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GzipArchiveCore
-import graft.operators.{Bpe, Similarity}
+import graft.operators.{Bpe, SimilarityInt}
 import graft.sources.WebArchive
 
 /** Round-12 closures of the round-11 advice items (WET ingest must
@@ -178,7 +178,8 @@ class Round12Spec extends AnyFunSuite {
       .toDF("vec_id", "embedding") // 15 dims, m = 4
     val e = intercept[Exception] {
       graft.ops.Memo.clear(spark)
-      Similarity.pqTrain(v, m = 4, ksub = 4, lloydIters = 0)
+      SimilarityInt.pqTrainInt(SimilarityInt.zCodes(v), m = 4, ksub = 4,
+        iters = 0, seed = 42L, memoKey = "round12:pq_divisibility")
         .centroids.collect()
     }
     def messages(t: Throwable): Seq[String] =
@@ -246,53 +247,6 @@ class Round12Spec extends AnyFunSuite {
     assert(out.count() == 2)
     assert(out.filter($"quarantine".isNull).count() == 1)
     assert(out.filter($"quarantine".isNotNull).count() == 1)
-  }
-
-  // ----------------------------------------------------- IVF-PQ composition
-
-  private def rndVecs(n: Int, dim: Int, seed: Int) = {
-    val rnd = new scala.util.Random(seed)
-    (0 until n).map(i => (i.toLong,
-      Array.fill(dim)(rnd.nextFloat() * 2f - 1f).toSeq))
-      .toDF("vec_id", "embedding")
-  }
-
-  test("ivfPqTopK: all-lists probe + per-vector codewords is EXACT (closed form) and equals brute force") {
-    // ksub >= corpus and lloydIters = 0 make every residual its own
-    // codeword (assignment distance 0), and nprobe = nlist probes
-    // everything — so ADC distance IS the exact distance and the
-    // shortlist ranking is already the true ranking
-    graft.ops.Memo.clear(spark)
-    val v = rndVecs(12, 16, seed = 19)
-    val idx = Similarity.ivfPqBuild(v, nlist = 3, m = 4, ksub = 16,
-      lloydIters = 0)
-    val queries = v.filter($"vec_id" < 3)
-    val got = Similarity.ivfPqTopK(idx, queries, v, k = 5, nprobe = 3,
-      rerank = 11)
-      .as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
-    val bf = Similarity.bruteForceTopK(v, queries, k = 5)
-      .as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
-    assert(got == bf)
-  }
-
-  test("ivfPqBuild: codes and results are deterministic across partitionings; codes are m ints per vector") {
-    val v = rndVecs(60, 16, seed = 23)
-    def run(parts: Int): (Seq[(Long, Int, Int, Int)], Seq[(Long, Long, Long)]) = {
-      graft.ops.Memo.clear(spark)
-      val idx = Similarity.ivfPqBuild(v.repartition(parts), nlist = 8,
-        m = 4, ksub = 8, lloydIters = 2)
-      val codes = idx.codes.as[(Long, Long, Int, Int)].collect()
-        .map(c => (c._1, c._2.toInt, c._3, c._4)).sortBy(c => (c._1, c._3)).toSeq
-      val top = Similarity.ivfPqTopK(idx, v.filter($"vec_id" < 4), v,
-        k = 5, nprobe = 4, rerank = 20)
-        .as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
-      (codes, top)
-    }
-    val (c1, t1) = run(1)
-    val (c13, t13) = run(13)
-    assert(c1 == c13 && t1 == t13)
-    assert(c1.size == 60 * 4 && c1.map(_._1).distinct.size == 60)
-    assert(c1.forall(c => c._4 >= 0 && c._4 < 8))
   }
 
   // ----------------------------------------------- streaming archive ingest

@@ -326,6 +326,14 @@ class Round20Spec extends AnyFunSuite {
       .select("query_id", "neighbor_id", "rank")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got === exact)
+    // the IVFADC closed form: every list probed and every residual its
+    // own codeword, so the residual ADC distances are exact as well
+    val ivfPq = SimilarityInt.ivfPqBuildInt(z, nlist = 3, m = 2, ksub = 16,
+      iters = 0, seed = 42L, memoKey = "r20spec:ivfpq_lossless")
+    val gotIvfPq = SimilarityInt.ivfPqTopKInt(ivfPq, qz, z, k = 5,
+      nprobe = 3, rerank = 15)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(gotIvfPq === exact)
   }
 
   /** Partitioning determinism — the property the whole family exists

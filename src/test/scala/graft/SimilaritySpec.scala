@@ -75,25 +75,40 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("ivf topk: deterministic, recall beats random, ranks inversion-free") {
     import spark.implicits._
-    val i1 = Similarity.ivfTopK(emb, queries, k = 10).collect().toSet
-    val i2 = Similarity.ivfTopK(emb, queries, k = 10).collect().toSet
+    import graft.operators.SimilarityInt
+    val z = SimilarityInt.zCodes(emb)
+    val qz = z.filter($"vid" < 10)
+    // distinct memo keys, so each call trains its own centroids
+    def ivf(k: Int, nlist: Int, nprobe: Int, tag: String) =
+      SimilarityInt.ivfTopKInt(SimilarityInt.ivfBuildInt(z, nlist, iters = 2,
+        seed = 42L, memoKey = s"simspec:ivf:$nlist:$tag"), qz, z, k, nprobe)
+    val i1 = ivf(10, 32, 4, "a").collect().toSet
+    val i2 = ivf(10, 32, 4, "b").collect().toSet
     assert(i1 == i2, "IVF must be deterministic (seeded centroid sample)")
     val exact = Similarity.bruteForceTopK(emb, queries, k = 10)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // generous probe budget for the recall pin (uniform random corpus
     // is ANN-adversarial, same caveat as the SRP spec)
-    val ivf = Similarity.ivfTopK(emb, queries, k = 10, nlist = 16, nprobe = 8)
+    val found = ivf(10, 16, 8, "a")
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (exact & ivf).size.toDouble / exact.size
+    val recall = (exact & found).size.toDouble / exact.size
     assert(recall > 10 * (10.0 / emb.count()),
       s"recall $recall must beat random by 10x")
-    // exact scoring: restricted ordering agrees with brute force
-    val exactRank = Similarity.bruteForceTopK(emb, queries, k = 500)
-      .withColumnRenamed("rank", "exact_rank")
-    val joined = Similarity.ivfTopK(emb, queries, k = 10)
-      .join(exactRank, Seq("query_id", "neighbor_id"))
+    // exact scoring: restricted ordering agrees with the exact
+    // integer-dot order over the whole corpus
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("query_id").orderBy(col("dot").desc, col("neighbor_id").asc)
+    val exactRank = qz.select($"vid".as("query_id"), $"z".as("qz"))
+      .crossJoin(z.select($"vid".as("neighbor_id"), $"z".as("cz")))
+      .filter($"query_id" =!= $"neighbor_id")
+      .withColumn("dot", expr(
+        "aggregate(zip_with(qz, cz, (p, q) -> p * q), 0L, (x, y) -> x + y)"))
+      .withColumn("exact_rank", row_number().over(w))
+      .select("query_id", "neighbor_id", "exact_rank")
+    val joined = ivf(10, 32, 4, "a").join(exactRank, Seq("query_id", "neighbor_id"))
+    assert(joined.count() == i1.size)
     val inversions = joined.as("x").join(joined.as("y"),
         $"x.query_id" === $"y.query_id" &&
         $"x.rank" < $"y.rank" && $"x.exact_rank" > $"y.exact_rank")
@@ -102,9 +117,10 @@ class SimilaritySpec extends AnyFunSuite {
     // candidate volume is bounded by the probed share of the corpus
     // (the IVF cost dial): with nprobe/nlist = 1/8 of lists probed no
     // query may scan anywhere near the full corpus
-    val cand = Similarity.ivfTopK(emb, queries, k = 1000000, nlist = 32, nprobe = 4)
+    val n = emb.count()
+    val cand = ivf(n.toInt, 32, 4, "a")
       .groupBy("query_id").count().agg(max("count")).first().getLong(0)
-    assert(cand < emb.count(), "IVF must never degenerate to a full scan")
+    assert(cand < n, "IVF must never degenerate to a full scan")
   }
 
   test("near-dup pairs carry cos >= threshold and no self-pairs") {

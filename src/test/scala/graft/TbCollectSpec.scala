@@ -13,7 +13,7 @@ import graft.ops.tb.{TbCollect, TbPipeline}
 class TbCollectSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
-  private val tbCsv = "/root/reference/data/raw/who_tb_data_20250923_041355.csv"
+  private def tbCsv = ReferenceFiles.tbCsv
 
   test("primary snapshot present: who_csv leg wins and output equals the direct read") {
     val (leg, df) = TbCollect.collectTb(spark, Some(tbCsv), None)

@@ -16,9 +16,8 @@ import graft.ops.tb.TbPipeline
 class TbHttpServeSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
-  private val refRaw = "/root/reference/data/raw"
-  private val tbCsv = s"$refRaw/who_tb_data_20250923_041355.csv"
-  private val popCsv = s"$refRaw/worldbank_population_20250923_041355.csv"
+  private def tbCsv = ReferenceFiles.tbCsv
+  private def popCsv = ReferenceFiles.popCsv
 
   test("every endpoint serves the writePayloads bytes; 404/health per reference") {
     val out = Files.createTempDirectory("graft_http").toString

@@ -67,9 +67,7 @@ class TbIngestSpec extends AnyFunSuite {
   }
 
   test("typed country trends expose decimal rates with schema checked at compile time") {
-    val p = TbPipeline.run(spark,
-      "/root/reference/data/raw/who_tb_data_20250923_041355.csv",
-      "/root/reference/data/raw/worldbank_population_20250923_041355.csv")
+    val p = TbPipeline.run(spark, ReferenceFiles.tbCsv, ReferenceFiles.popCsv)
     val typed = Models.countryTrends(p.countryTrends)
     val idn2023 = typed.filter(t => t.iso3 == "IDN" && t.year == 2023).collect()(0)
     assert(idn2023.total_cases == 1090000.0)

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.tb.{TbPipeline, TbServing}
 
 /** Golden-file parity against the reference's committed outputs
-  * (CSVs under /root/reference/data/processed — the de-facto golden files,
+  * (CSVs under the reference snapshot's processed/ — the de-facto golden files,
   * SURVEY §5). Values are compared numerically: strings exactly,
   * numbers to 1e-6 relative (the goldens carry pandas float formatting
   * noise like `265.948` vs `10.165000`).
@@ -15,10 +15,8 @@ import graft.ops.tb.{TbPipeline, TbServing}
 class TbPipelineSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
-  private val refRaw = "/root/reference/data/raw"
-  private val refOut = "/root/reference/data/processed"
-  private val tbCsv = s"$refRaw/who_tb_data_20250923_041355.csv"
-  private val popCsv = s"$refRaw/worldbank_population_20250923_041355.csv"
+  private def tbCsv = ReferenceFiles.tbCsv
+  private def popCsv = ReferenceFiles.popCsv
 
   private lazy val products = TbPipeline.run(spark, tbCsv, popCsv)
 
@@ -66,17 +64,17 @@ class TbPipelineSpec extends AnyFunSuite {
   }
 
   test("country_summary matches the reference golden byte-for-value") {
-    assertMatchesGolden(products.countrySummary, s"$refOut/country_summary.csv",
+    assertMatchesGolden(products.countrySummary, ReferenceFiles.processed("country_summary.csv"),
       Seq("iso3", "year"))
   }
 
   test("yearly_trends matches the reference golden (incl. unweighted-avg trap)") {
-    assertMatchesGolden(products.yearlyTrends, s"$refOut/yearly_trends.csv",
+    assertMatchesGolden(products.yearlyTrends, ReferenceFiles.processed("yearly_trends.csv"),
       Seq("year"))
   }
 
   test("country_trends matches the reference golden") {
-    assertMatchesGolden(products.countryTrends, s"$refOut/country_trends.csv",
+    assertMatchesGolden(products.countryTrends, ReferenceFiles.processed("country_trends.csv"),
       Seq("iso3", "year"))
   }
 
@@ -98,6 +96,29 @@ class TbPipelineSpec extends AnyFunSuite {
     val fixed = TbPipeline.cleanTb(swapped)
     assert(fixed.count() == 2)
     assert(fixed.select("year").distinct().collect()(0).getInt(0) == 2018)
+  }
+
+  test("partly transposed file: untransposed rows drop instead of aborting under ANSI") {
+    import spark.implicits._
+    // the 5-row probe sees transposition, so the whole-file swap also
+    // turns the two untransposed rows' indicators into years
+    val mixed = Seq(
+      ("Cambodia", "KHM", "WPR", "e_inc_num", "2018", 100.0),
+      ("Cambodia", "KHM", "WPR", "e_mort_num", "2018", 10.0),
+      ("Cambodia", "KHM", "WPR", "e_inc_num", "2019", 110.0),
+      ("Cambodia", "KHM", "WPR", "e_mort_num", "2019", 11.0),
+      ("Viet Nam", "VNM", "WPR", "e_inc_num", "2018", 200.0),
+      ("Viet Nam", "VNM", "WPR", "e_mort_num", "2018", 20.0),
+      ("Viet Nam", "VNM", "WPR", "2019", "e_inc_num", 210.0),
+      ("Viet Nam", "VNM", "WPR", "2019", "e_mort_num", 21.0))
+      .toDF("country", "iso3", "g_whoregion", "year", "indicator", "value")
+    val got = TbPipeline.cleanTb(mixed)
+      .select("iso3", "year", "indicator", "value")
+      .as[(String, Int, String, Double)].collect().toSet
+    assert(got == Set(
+      ("KHM", 2018, "e_inc_num", 100.0), ("KHM", 2018, "e_mort_num", 10.0),
+      ("KHM", 2019, "e_inc_num", 110.0), ("KHM", 2019, "e_mort_num", 11.0),
+      ("VNM", 2018, "e_inc_num", 200.0), ("VNM", 2018, "e_mort_num", 20.0)))
   }
 
   test("melt round-trips a wide shape into the long schema") {

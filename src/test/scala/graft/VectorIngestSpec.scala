@@ -1,20 +1,20 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Similarity
+import graft.operators.SimilarityInt
 import graft.streaming.VectorIngest
 
 /** Vector-ingest contract: bootstrap trains frozen centroids, appends
   * cluster against them, the materialized index answers queries
-  * exactly as the composed operators would, and replays are
+  * exactly as the composed integer operators would, and replays are
   * idempotent. */
 class VectorIngestSpec extends AnyFunSuite {
   import SparkTestSession.spark
   import spark.implicits._
 
   private val emb = Tables.embeddings(spark, SparkTestSession.sf)
+  private def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
 
   test("bootstrap + append: index equals frozen-centroid composition; queries match") {
     val outDir = java.nio.file.Files.createTempDirectory("graft_vec_idx").toString
@@ -25,37 +25,32 @@ class VectorIngestSpec extends AnyFunSuite {
 
     val idx = VectorIngest.readIndex(spark, outDir).get
     // centroids are wave-1's deterministic training, frozen
-    val expCents = Similarity.ivfBuildIndex(wave1).centroids
-      .collect().map(_.toSeq).toSet
-    assert(idx.centroids.collect().map(_.toSeq).toSet == expCents)
+    val cents = SimilarityInt.ivfTrainInt(SimilarityInt.zCodes(wave1),
+      nlist = 32, iters = 2, seed = 42L, memoKey = "vecspec:boot")
+    assert(rows(idx.centroids) == rows(cents))
     // every vector is in exactly one list
     assert(idx.lists.count() == emb.count())
     assert(idx.lists.select("vid").distinct().count() == emb.count())
     // queries against the materialized index == the composed
     // frozen-centroid expectation over the full corpus
     val queries = emb.filter($"vec_id" < 10)
-    val got = VectorIngest.topK(spark, outDir, queries, k = 10)
-      .collect().map(_.toSeq).toSet
-    val expIdx = Similarity.IvfIndex(
-      Similarity.ivfBuildIndex(wave1).centroids,
-      Similarity.ivfAssign(Similarity.ivfBuildIndex(wave1).centroids,
-        emb.select($"vec_id".as("vid"), $"embedding".as("cv"))))
-    val exp = Similarity.ivfTopKIndexed(expIdx, queries, k = 10)
-      .collect().map(_.toSeq).toSet
-    assert(got == exp)
+    val got = rows(VectorIngest.topK(spark, outDir, queries, k = 10))
+    val z = SimilarityInt.zCodes(emb)
+    val exp = rows(SimilarityInt.ivfTopKInt(
+      SimilarityInt.IntIvfIndex(cents, SimilarityInt.ivfAssignInt(cents, z)),
+      SimilarityInt.zCodes(queries), z, k = 10, nprobe = 4))
+    assert(got.nonEmpty && got == exp)
   }
 
   test("append replay is idempotent against the frozen centroids") {
     val outDir = java.nio.file.Files.createTempDirectory("graft_vec_rep").toString
     VectorIngest.processBatch(emb.filter($"vec_id" < 250), outDir, 0L)
     VectorIngest.processBatch(emb.filter($"vec_id" >= 250), outDir, 1L)
-    val once = VectorIngest.readIndex(spark, outDir).get.lists
-      .collect().map(_.toSeq).toSet
+    val once = rows(VectorIngest.readIndex(spark, outDir).get.lists)
     // crash-replay of both batches in order
     VectorIngest.processBatch(emb.filter($"vec_id" < 250), outDir, 0L)
     VectorIngest.processBatch(emb.filter($"vec_id" >= 250), outDir, 1L)
-    val twice = VectorIngest.readIndex(spark, outDir).get.lists
-      .collect().map(_.toSeq).toSet
+    val twice = rows(VectorIngest.readIndex(spark, outDir).get.lists)
     assert(once == twice)
   }
 
@@ -79,21 +74,24 @@ class VectorIngestSpec extends AnyFunSuite {
     // frozen-table expectation over the full corpus
     graft.ops.Memo.clear(spark)
     val queries = emb.filter($"vec_id" < 10)
-    val got = VectorIngest.topKPq(spark, outDir, queries, emb, k = 10,
-      nprobe = 8, rerank = 40).collect().map(_.toSeq).toSet
-    val boot = Similarity.ivfPqBuild(wave1, nlist = 16, m = 4, ksub = 8)
-    val expIdx = Similarity.IvfPqIndex(boot.centroids, boot.codebook,
-      Similarity.ivfPqAssign(boot.centroids, boot.codebook, emb))
-    val exp = Similarity.ivfPqTopK(expIdx, queries, emb, k = 10,
-      nprobe = 8, rerank = 40).collect().map(_.toSeq).toSet
-    assert(got == exp)
+    val got = rows(VectorIngest.topKPq(spark, outDir, queries, emb, k = 10,
+      nprobe = 8, rerank = 40))
+    val z = SimilarityInt.zCodes(emb)
+    val boot = SimilarityInt.ivfPqBuildInt(SimilarityInt.zCodes(wave1),
+      nlist = 16, m = 4, ksub = 8, iters = 2, seed = 42L, memoKey = "vecspec:pqboot")
+    assert(rows(idx.centroids) == rows(boot.centroids))
+    assert(rows(idx.codebook.centroids) == rows(boot.codebook.centroids))
+    val expIdx = SimilarityInt.IntIvfPqIndex(boot.centroids, boot.codebook,
+      SimilarityInt.ivfPqAssignInt(boot.centroids, boot.codebook, z))
+    val exp = rows(SimilarityInt.ivfPqTopKInt(expIdx, SimilarityInt.zCodes(queries),
+      z, k = 10, nprobe = 8, rerank = 40))
+    assert(got.nonEmpty && got == exp)
 
     // crash-replay of both batches: bit-identical code rows
-    val once = idx.codes.collect().map(_.toSeq).toSet
+    val once = rows(idx.codes)
     VectorIngest.processBatchPq(wave1, outDir, 0L, nlist = 16, m = 4, ksub = 8)
     VectorIngest.processBatchPq(wave2, outDir, 1L, nlist = 16, m = 4, ksub = 8)
-    val twice = VectorIngest.readPqIndex(spark, outDir).get.codes
-      .collect().map(_.toSeq).toSet
+    val twice = rows(VectorIngest.readPqIndex(spark, outDir).get.codes)
     assert(once == twice)
   }
 
@@ -101,6 +99,7 @@ class VectorIngestSpec extends AnyFunSuite {
     val outDir = java.nio.file.Files.createTempDirectory("graft_vec_crash").toString
     val wave1 = emb.filter($"vec_id" < 250)
     VectorIngest.processBatchPq(wave1, outDir, 0L, nlist = 16, m = 4, ksub = 8)
+    val whole = rows(VectorIngest.readPqIndex(spark, outDir).get.centroids)
     // simulate the only crash-reachable partial state under the
     // codebook-before-marker write order: codebook persisted, centroid
     // commit marker not (the inverse order left marker-present/
@@ -113,17 +112,22 @@ class VectorIngestSpec extends AnyFunSuite {
     // replay must take the TRAIN branch and leave a whole, queryable index
     VectorIngest.processBatchPq(wave1, outDir, 0L, nlist = 16, m = 4, ksub = 8)
     val idx = VectorIngest.readPqIndex(spark, outDir).get
-    assert(idx.centroids.select("cid").distinct().count() == 16L)
+    assert(whole.nonEmpty && rows(idx.centroids) == whole)
     assert(idx.codes.select("vid").distinct().count() == wave1.count())
   }
 
-  test("ivfTopKIndexed over ivfBuildIndex is exactly ivfTopK (the refactor contract)") {
+  test("single-batch ingest builds the same index as ivfBuildInt") {
+    val outDir = java.nio.file.Files.createTempDirectory("graft_vec_one").toString
+    VectorIngest.processBatch(emb, outDir, 0L, nlist = 16)
+    val idx = VectorIngest.readIndex(spark, outDir).get
+    val z = SimilarityInt.zCodes(emb)
+    val built = SimilarityInt.ivfBuildInt(z, nlist = 16, iters = 2, seed = 42L,
+      memoKey = "vecspec:one")
+    assert(rows(idx.centroids) == rows(built.centroids))
+    assert(rows(idx.lists) == rows(built.lists))
     val queries = emb.filter($"vec_id" < 10)
-    val direct = Similarity.ivfTopK(emb, queries, k = 10, nlist = 16, nprobe = 4)
-      .collect().map(_.toSeq).toSet
-    val viaIndex = Similarity.ivfTopKIndexed(
-        Similarity.ivfBuildIndex(emb, nlist = 16), queries, k = 10, nprobe = 4)
-      .collect().map(_.toSeq).toSet
-    assert(direct == viaIndex)
+    assert(rows(VectorIngest.topK(spark, outDir, queries, k = 10)) ==
+      rows(SimilarityInt.ivfTopKInt(built, SimilarityInt.zCodes(queries), z,
+        k = 10, nprobe = 4)))
   }
 }
